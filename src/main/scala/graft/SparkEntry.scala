@@ -57,7 +57,7 @@ object SparkEntry {
   /** Flagship: full parse→enrich→route→aggregate on sf0.001. */
   def entry(spark: SparkSession): DataFrame = {
     val tr = Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
-    val (_, counts) = Pipeline.run(spark, tr)
+    val (_, counts) = Pipeline.flagship.run(spark, tr)
     counts.toSeq.sortBy(_._1).map { case (sink, df) =>
       df.select(lit(sink).as("sink"), col("window_start"), col("count"))
     }.reduce(_ unionByName _)
@@ -811,9 +811,9 @@ object SparkEntry {
     // -- expression language (OTTL/EXPR strings → Column; §2.8) --
     "p41_route_string_config" -> ((s, dir) =>
       // identical routing to p08 but the predicates are parsed from OTTL
-      // condition STRINGS (Pipeline.routeConditionStrings → ExprLang) —
+      // condition STRINGS (flagship.yaml `where` clauses → ExprLang) —
       // the config-text path of pkg/ottl/parser.go statement compilation
-      RouteStage.tagged(Pipeline.parseEnrich(s, t(s, dir)), Pipeline.routeTableFromStrings)
+      RouteStage.tagged(Pipeline.parseEnrich(s, t(s, dir)), Pipeline.routeTable)
         .groupBy("route").agg(count(lit(1)).as("n"))),
 
     "p42_expr_template" -> ((s, dir) =>

@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.agg.CountStage
@@ -16,12 +16,14 @@ import graft.model.PipelineConfig._
 import graft.parse.ParseStage
 import graft.route.RouteStage
 
-/** YAML pipeline-config surface — the last step to "a user ships a
-  * config file, not Scala": the analog of the reference collector's
-  * confmap round-trip (`pkg/stanza/operator/operatortest/confmap.go`
-  * unmarshals a YAML fixture into an operator config struct and asserts
-  * equality with the programmatic expectation; our ConfigLoaderSpec
-  * does the same against [[graft.run.Pipeline]]'s flagship config).
+/** YAML pipeline-config surface — the one way a pipeline is defined:
+  * the analog of the reference collector's confmap round-trip
+  * (`pkg/stanza/operator/operatortest/confmap.go` unmarshals a YAML
+  * fixture into an operator config struct and asserts equality with the
+  * expected struct; ConfigLoaderSpec does the same for the bundled
+  * `flagship.yaml`). The flagship itself ([[graft.run.Pipeline]]) is
+  * that bundled resource, loaded and compiled here like any user file,
+  * and a job given no config file runs it.
   *
   * The FILE model ([[GraftFileConfig]]) is pure data — pattern strings,
   * OTTL condition strings, attr (key, default) pairs — so it
@@ -236,8 +238,15 @@ object ConfigLoader {
 
   // ---------------- compile (file model -> runtime model) ----------------
 
-  /** Compiled runtime pipeline: everything [[graft.run.Pipeline]]
-    * exposes programmatically, built from a file. */
+  /** Attribute resolution for metric attrs — the ONE definition: post-
+    * parse fields live in the `parsed` map, enriched/base attrs are
+    * top-level columns. */
+  def resolveAttr(parsedFields: Set[String])(key: String): Column =
+    if (parsedFields(key)) col("parsed").getItem(key) else col(key)
+
+  /** Compiled runtime pipeline: parse bank, compiled route table and
+    * metrics, enrich spec — what [[graft.run.Pipeline]] projects for the
+    * bundled flagship. */
   final case class Compiled(parse: ParseConfig,
                             routeTable: RouteTable,
                             metrics: Seq[MetricSpec],
@@ -248,15 +257,13 @@ object ConfigLoader {
 
     def resolver: ExprLang.Resolver = ExprLang.transcriptResolver(parsedFields)
 
-    /** Attribute resolution for metric attrs — the ONE definition
-      * ([[graft.run.Pipeline.resolveAttr]]); the YAML and programmatic
-      * paths must never diverge on where an attribute lives. */
-    private def resolveAttr: String => org.apache.spark.sql.Column =
-      graft.run.Pipeline.resolveAttr(parsedFields)
+    private def resolveAttr: String => Column =
+      ConfigLoader.resolveAttr(parsedFields)
 
-    /** parse → enrich, mirroring Pipeline.parseEnrich (barrier=false is
-      * correct for the single-projection flagship shape; see
-      * ParseStage.apply scaladoc for the trade). */
+    /** parse → enrich. `barrier=false`: the flagship plan references
+      * the bank output only inside one projection, which Catalyst CSE
+      * keeps at ONE evaluation (PlanSpec counts occurrences); see
+      * ParseStage.apply scaladoc for the trade. */
     def parseEnrich(spark: SparkSession, transcripts: DataFrame): DataFrame = {
       val parsed = ParseStage(transcripts, parse, barrier = false)
       enrich match {
@@ -283,12 +290,12 @@ object ConfigLoader {
       }
     }
 
-    /** Full run: (per-sink frames, per-sink windowed counts) — the
-      * config-file rendering of Pipeline.run. Counts derive from ONE
-      * exploded-tag pass exactly like Pipeline.run (a count per fanOut
-      * frame would re-scan the source and re-evaluate the pattern bank
-      * once per sink — 2k scans for k sinks when a caller materializes
-      * everything). */
+    /** Full run: (per-sink frames, per-sink windowed counts). Counts
+      * derive from ONE exploded-tag pass (a count per fanOut frame would
+      * re-scan the source and re-evaluate the pattern bank once per
+      * sink — 2k scans for k sinks when a caller materializes
+      * everything); a caller that writes the lazy sink frames pays one
+      * scan each, or uses [[graft.run.PipelineJob]]'s one-scan fan-out. */
     def run(spark: SparkSession, transcripts: DataFrame)
         : (Map[String, DataFrame], Map[String, DataFrame]) = {
       val enriched = parseEnrich(spark, transcripts)

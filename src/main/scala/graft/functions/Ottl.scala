@@ -218,7 +218,6 @@ object Ottl {
     * `parse_json` a raw value into a variant, then test its runtime
     * schema. Strings stay strings — IsDouble("1.5") is false, exactly
     * like the reference's type switch. */
-  def variantTypeName(c: Column): Column = schema_of_variant(c)
   def isBool(c: Column): Column = schema_of_variant(c) === "BOOLEAN"
   /** JSON fractional numbers surface as DECIMAL(p,s) in the variant
     * schema; pcommon treats any fractional number as Double. */

@@ -192,11 +192,14 @@ object Dedup {
       .filter(firstShared === col("band"))
       .select(col("id_a"), col("id_b"))
     // candidate members (≪ corpus): broadcast-filter the re-scan so the
-    // corpus side never shuffles, then attach each side's shingle set
-    val candIds = cand.select(explode(array(col("id_a"), col("id_b"))).as("id"))
+    // corpus side never shuffles, then attach each side's shingle set.
+    // The member id is the reserved `__nd_id`: this join sees the
+    // caller's columns, and a bare "id" would be ambiguous against a
+    // caller column of that name
+    val candIds = cand.select(explode(array(col("id_a"), col("id_b"))).as("__nd_id"))
       .distinct()
-    val shHit = df.join(broadcast(candIds), col(idCol) === col("id"))
-      .select(col("id"),
+    val shHit = df.join(broadcast(candIds), col(idCol) === col("__nd_id"))
+      .select(col("__nd_id"),
         // sorted ONCE per doc so the per-pair verify takes JaccardSim's
         // unboxed merge fast path (set semantics: value unchanged)
         sort_array(shingleHashes(col(textCol), shingleSize)).as("shh"))
@@ -211,9 +214,9 @@ object Dedup {
     // workload keeps orders below the corpus (and the broadcast is of
     // hashed shingle sets, not documents).
     cand
-      .join(broadcast(shHit.select(col("id").as("id_a"), col("shh").as("sh_a"))),
+      .join(broadcast(shHit.select(col("__nd_id").as("id_a"), col("shh").as("sh_a"))),
         Seq("id_a"))
-      .join(broadcast(shHit.select(col("id").as("id_b"), col("shh").as("sh_b"))),
+      .join(broadcast(shHit.select(col("__nd_id").as("id_b"), col("shh").as("sh_b"))),
         Seq("id_b"))
       .select(col("id_a"), col("id_b"), jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
@@ -271,8 +274,11 @@ object Dedup {
           bandHashes(minhashSignature(shingleHashes(t, shingleSize),
             numHashes), numHashes, bands).as("_bhs"))
         .select(col(idName), posexplode(col("_bhs")).as(Seq("band", "bh")))
-    val corpus = bandedIds(docs, col(idCol), "doc_id_c", col(textCol))
-    val bench = bandedIds(benchmark, col(benchIdCol), "bench_id_c",
+    // internal ids use reserved `__nd_*` names: the candidate re-scan
+    // joins against the caller's own columns, where any other name
+    // could collide (AMBIGUOUS_REFERENCE)
+    val corpus = bandedIds(docs, col(idCol), "__nd_doc", col(textCol))
+    val bench = bandedIds(benchmark, col(benchIdCol), "__nd_bench",
       col(benchTextCol))
     // a true near-dup shares most of its bands — dedup pair hits
     // before the exact-Jaccard verify (16-byte HashAggregate rows; the
@@ -282,19 +288,19 @@ object Dedup {
     // FirstSharedBand dedup the self-join path uses, whose exchange-free
     // pair stream had to be pinned or recomputed per consumer)
     val cand = corpus.join(broadcast(bench), Seq("band", "bh"))
-      .select(col("doc_id_c"), col("bench_id_c")).distinct()
-    val candDocIds = cand.select(col("doc_id_c")).distinct()
+      .select(col("__nd_doc"), col("__nd_bench")).distinct()
+    val candDocIds = cand.select(col("__nd_doc")).distinct()
     val corpusSh = docs.join(broadcast(candDocIds),
-        col(idCol) === col("doc_id_c"))
-      .select(col("doc_id_c"),
+        col(idCol) === col("__nd_doc"))
+      .select(col("__nd_doc"),
         // sorted once per doc -> JaccardSim merge fast path (see
         // nearDupMinhashLsh; set semantics, value unchanged)
         sort_array(shingleHashes(col(textCol), shingleSize)).as("sh_d"))
-    val benchSh = benchmark.select(col(benchIdCol).as("bench_id_c"),
+    val benchSh = benchmark.select(col(benchIdCol).as("__nd_bench"),
       sort_array(shingleHashes(col(benchTextCol), shingleSize)).as("sh_b"))
-    cand.join(corpusSh, Seq("doc_id_c"))
-      .join(broadcast(benchSh), Seq("bench_id_c"))
-      .select(col("doc_id_c").as(idCol), col("bench_id_c").as(benchIdCol),
+    cand.join(corpusSh, Seq("__nd_doc"))
+      .join(broadcast(benchSh), Seq("__nd_bench"))
+      .select(col("__nd_doc").as(idCol), col("__nd_bench").as(benchIdCol),
         jaccard(col("sh_d"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }

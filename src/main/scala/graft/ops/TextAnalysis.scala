@@ -971,14 +971,4 @@ object TextAnalysis {
         length(col(textCol)).cast("bigint").as("n_chars"),
         size(split(encoded, SEP)).cast("bigint").as("n_bpe_tokens"))
   }
-
-  /** Per-document fingerprint + analysis frame. */
-  def analyze(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(
-      col(idCol),
-      langId(col(textCol)).as("lang_pred"),
-      tokenCountWhitespace(col(textCol)).as("n_tokens_ws"),
-      tokenCountBpeIsh(col(textCol)).as("n_tokens_bpe"),
-      fingerprint(col(textCol)).as("fingerprint"),
-      qualityMetrics(col(textCol)).as("quality"))
 }

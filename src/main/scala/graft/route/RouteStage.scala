@@ -91,8 +91,8 @@ object RouteStage {
   /** Per-sink frames + the single-scan tagged stream, honoring the
     * table's match semantics in ONE place (match_once → first-match
     * single tag, `routingconnector/logs.go:87`; default → multi-match
-    * explosion). Both materialized run paths (Pipeline.run and the
-    * config surface's Compiled.run) route through here: they previously
+    * explosion). The materialized run path (Compiled.run, which the
+    * flagship shares) routes through here: the run paths previously
     * each hard-coded the multi-match pair, so a `match_once: true`
     * config silently got fan-out duplicates in every matching sink and
     * doubled every per-route count. Counts derived from the returned

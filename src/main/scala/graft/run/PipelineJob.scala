@@ -32,11 +32,12 @@ object PipelineJob {
       "usage: PipelineJob <transcriptsPath> <outDir> [windowDur] [config.yaml]")
     val Array(inPath, outDir) = args.take(2)
     // optional YAML config (graft.config.ConfigLoader schema): the
-    // user-ships-a-config-not-Scala surface; omitted -> the flagship
-    // programmatic config. Extra args are recognized by SHAPE (*.yaml /
-    // *.yml = config, anything else = windowDur) so the config's
-    // `window:` field is reachable without a positional placeholder —
-    // an explicit windowDur arg still wins over the config's window.
+    // user-ships-a-config-not-Scala surface; omitted -> the bundled
+    // flagship.yaml (Pipeline.flagship). Extra args are recognized by
+    // SHAPE (*.yaml / *.yml = config, anything else = windowDur) so the
+    // config's `window:` field is reachable without a positional
+    // placeholder — an explicit windowDur arg still wins over the
+    // config's window.
     val (fileModel, fileCfg, windowDur) = parseExtraArgs(args.drop(2))
 
     failFastLocalHeap("PipelineJob")
@@ -55,26 +56,11 @@ object PipelineJob {
     spark.sparkContext.addSparkListener(metrics)
 
     val table = Transcripts.TranscriptTable()
-    val routeTable = fileCfg.map(_.routeTable)
-      .getOrElse(graft.run.Pipeline.routeTable)
-    def parseEnrich(turns: org.apache.spark.sql.DataFrame) = fileCfg match {
-      case Some(c) => c.parseEnrich(spark, turns)
-      case None => graft.run.Pipeline.parseEnrich(spark, turns)
-    }
-    // The fingerprint must cover the WHOLE effective config, not just
-    // pattern regexes and route names: editing a route's WHERE clause,
-    // the enrich spec, on_error, or a metric definition while keeping
-    // names identical must invalidate committed sinks, or a resume
-    // silently ships outputs computed under the OLD config. For file
-    // configs the canonical rendered YAML is the config identity; the
-    // programmatic flagship pins its condition/metric strings.
-    val configText = fileModel.map(graft.config.ConfigLoader.render)
-      .getOrElse {
-        graft.run.Pipeline.patternBank.map(p => p.name + p.regex).mkString("|") +
-          graft.run.Pipeline.routeConditionStrings.map { case (n, w) => s"$n:$w" }
-            .mkString(";") +
-          graft.run.Pipeline.metricConfigStrings.toString
-      }
+    val cfg = fileCfg.getOrElse(Pipeline.flagship)
+    val routeTable = cfg.routeTable
+    def parseEnrich(turns: org.apache.spark.sql.DataFrame) =
+      cfg.parseEnrich(spark, turns)
+    val configText = configIdentity(fileModel)
     // per-STAGE fingerprints: the fan-out's output does not depend on
     // the window, so changing only windowDur must not invalidate the
     // dominant routed write (it re-runs only the cheap count sinks)
@@ -143,6 +129,8 @@ object PipelineJob {
           MetricSpec("count", attrs = Seq(graft.model.PipelineConfig.AttrSpec("role"))),
           col("ts"), windowDur)
       }.toMap
+    // metric_* tables only for an explicitly passed config file: the
+    // default run writes sinks + counts_* alone
     val userMetrics = fileCfg.filter(_.metrics.nonEmpty) match {
       case Some(c) =>
         // over the enriched frame (pre-fan-out: multi-match duplicates
@@ -201,6 +189,17 @@ object PipelineJob {
       .orElse(fileCfg.map(_.window)).getOrElse("1 hour")
     (fileModel, fileCfg, windowDur)
   }
+
+  /** The config identity the stage fingerprints cover: the canonical
+    * rendered YAML of the effective config (the bundled flagship when no
+    * file is given), so editing ANY part of it — a WHERE clause, the
+    * enrich spec, on_error, a metric — invalidates committed sinks
+    * instead of resuming outputs computed under the OLD config. A
+    * default run and a run given a copy of flagship.yaml share one
+    * identity and resume each other. */
+  private[run] def configIdentity(
+      fileModel: Option[graft.config.ConfigLoader.GraftFileConfig]): String =
+    graft.config.ConfigLoader.render(fileModel.getOrElse(Pipeline.flagshipFile))
 
   /** FAIL FAST on an implausible heap BEFORE building the session:
     * in local mode the driver JVM hosts every executor thread, and

@@ -15,7 +15,7 @@ import graft.streaming.StreamingPipeline
   *     <transcriptsDir> <outDir> [windowDur] [config.yaml] [--once]
   *
   * Same config surface as [[PipelineJob]] (YAML via
-  * [[graft.config.ConfigLoader]], or the programmatic flagship), same
+  * [[graft.config.ConfigLoader]], or the bundled flagship), same
   * route-table match semantics (match_once → first-match single tag,
   * default → multi-match fan-out), driving:
   *
@@ -72,7 +72,7 @@ object StreamingJob {
       .getOrCreate()
 
     val hs = start(spark, inPath, outDir, fileCfg, windowDur,
-      lateness = fileCfg.map(_.lateness).getOrElse("10 minutes"),
+      lateness = fileCfg.getOrElse(Pipeline.flagship).lateness,
       once = once)
     if (once) {
       hs.all.foreach(_.awaitTermination())
@@ -97,11 +97,9 @@ object StreamingJob {
         graft.sources.Transcripts.transcriptSchema }
     val stream = spark.readStream.schema(schema).parquet(inPath)
 
-    val routeTable = fileCfg.map(_.routeTable).getOrElse(Pipeline.routeTable)
-    val enriched = fileCfg match {
-      case Some(c) => c.parseEnrich(spark, stream)
-      case None => Pipeline.parseEnrich(spark, stream)
-    }
+    val cfg = fileCfg.getOrElse(Pipeline.flagship)
+    val routeTable = cfg.routeTable
+    val enriched = cfg.parseEnrich(spark, stream)
     // honor the table's match semantics exactly like PipelineJob: a
     // match_once config silently getting fan-out duplicates would
     // inflate every per-route count
@@ -136,13 +134,13 @@ object StreamingJob {
       s"$outDir/counts", s"$outDir/_ck/counts")
 
     // configured count-connector metrics (`metric_<name>`, matching
-    // PipelineJob): over the PRE-fan-out enriched frame — multi-match
-    // explosion duplicates rows per route and would double-count global
-    // metrics. Metrics are a config-sized set, so one streaming query
-    // per metric (each its own checkpoint/table, independently
-    // restartable — the per-query variant's isolation is the RIGHT
-    // trade here, unlike the k-sink ingest path).
-    import org.apache.spark.sql.functions.col
+    // PipelineJob; only for an explicitly passed config): over the
+    // PRE-fan-out enriched frame — multi-match explosion duplicates
+    // rows per route and would double-count global metrics. Metrics are
+    // a config-sized set, so one streaming query per metric (each its
+    // own checkpoint/table, independently restartable — the per-query
+    // variant's isolation is the RIGHT trade here, unlike the k-sink
+    // ingest path).
     val wmEnriched = enriched.withWatermark("ts", lateness)
     val metricFrames: Seq[(String, org.apache.spark.sql.DataFrame)] =
       fileCfg.filter(_.metrics.nonEmpty) match {

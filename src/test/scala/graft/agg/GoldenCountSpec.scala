@@ -127,8 +127,8 @@ class GoldenCountSpec extends SparkSpec {
     import graft.synth.TranscriptSynth
     val enriched = Pipeline.parseEnrich(spark,
       TranscriptSynth.generate(spark, TranscriptSynth.Config(3000, 20))).cache()
-    val byHand = Pipeline.metricsByHand
-    val fromStrings = Pipeline.metricsFromStrings
+    val byHand = graft.run.FlagshipOracle.metricsByHand
+    val fromStrings = Pipeline.metrics
     assert(fromStrings.map(_.name) == byHand.map(_.name))
     fromStrings.zip(byHand).foreach { case (a, b) =>
       val fa = CountStage.count(enriched, a, Pipeline.resolveAttr(Pipeline.parsedFields))

@@ -32,6 +32,19 @@ class TailSamplingSpec extends SparkSpec {
     assert(got == expect)
   }
 
+  test("latency policy keeps conversations whose span reaches the threshold") {
+    val spans = parsed.groupBy("conv_id").agg(
+        ((max(unix_micros(col("ts").cast("timestamp")))
+          - min(unix_micros(col("ts").cast("timestamp"))))).as("span"))
+      .as[(String, Long)].collect().toMap
+    val threshold = spans.values.toSeq.sorted.apply(spans.size / 2)
+    val got = TailSampling.sample(parsed, TailSampling.latencyPolicy(threshold))
+      .select("conv_id").distinct().as[String].collect().toSet
+    val want = spans.collect { case (c, s) if s >= threshold => c }.toSet
+    assert(want.nonEmpty && want.size < spans.size)
+    assert(got == want)
+  }
+
   test("policy combinators: and / or / probabilistic determinism") {
     val stats = TailSampling.convStats(parsed).cache()
     val a = stats.filter(TailSampling.and(

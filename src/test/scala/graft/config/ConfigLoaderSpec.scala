@@ -5,15 +5,16 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.model.PipelineConfig._
-import graft.run.Pipeline
+import graft.run.{FlagshipOracle, Pipeline}
 import graft.synth.TranscriptSynth
 
-/** The confmap round-trip law (`pkg/stanza/operator/operatortest/
-  * confmap.go` in `/root/reference`): a YAML fixture unmarshals to
-  * exactly the programmatic config, and re-rendering it reloads to the
-  * same value. Then the compiled config must DRIVE the same pipeline:
-  * identical route row sets and identical metric frames as
-  * [[graft.run.Pipeline]] on the same transcripts.
+/** The confmap round-trip law (the reference collector's
+  * `pkg/stanza/operator/operatortest/confmap.go`): the bundled
+  * `flagship.yaml` unmarshals to exactly the FIXTURES.md config written out below, and
+  * re-rendering it reloads to the same value. Then the compiled flagship
+  * must DRIVE the same pipeline as the hand-written Column renderings
+  * ([[graft.run.FlagshipOracle]]): identical route row sets and
+  * identical metric frames on the same transcripts.
   */
 class ConfigLoaderSpec extends SparkSpec {
 
@@ -22,23 +23,41 @@ class ConfigLoaderSpec extends SparkSpec {
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
-  /** The flagship config as the FILE model (what the fixture encodes). */
-  private def flagshipFileConfig: ConfigLoader.GraftFileConfig =
-    ConfigLoader.GraftFileConfig(
-      parse = Pipeline.parseConfig,
-      enrich = Some(ConfigLoader.EnrichFile(Seq("tool"), "upsert", None)),
-      routes = ConfigLoader.RoutesFile(matchOnce = false, default = "default",
-        table = Pipeline.routeConditionStrings.map { case (n, w) =>
-          ConfigLoader.RouteFileSpec(n, w)
-        }),
-      metrics = Pipeline.metricConfigStrings.map { case (name, conds, attrs) =>
-        ConfigLoader.MetricFileSpec(name, conds,
-          attrs.map { case (k, d) => ConfigLoader.MetricAttr(k, d) })
-      },
+  /** The flagship config as the FILE model: FIXTURES.md §1 pattern
+    * bank, §3 route conditions and §4 metric definitions. */
+  private def flagshipFileConfig: ConfigLoader.GraftFileConfig = {
+    import ConfigLoader._
+    GraftFileConfig(
+      parse = ParseConfig(Seq(
+        PatternSpec("tool_call",
+          "^CALL tool=(?<tool_name>\\w+) args=(?<args_json>\\{.*\\}) dur_ms=(?<dur_ms>\\d+)$",
+          Seq("tool_name", "args_json", "dur_ms")),
+        PatternSpec("status",
+          "^(?<level>TRACE|DEBUG|INFO|WARN|ERROR|FATAL) \\[(?<component>[\\w.-]+)\\] (?<msg>.*)$",
+          Seq("level", "component", "msg")),
+        PatternSpec("kv",
+          "^(?<kvpairs>\\w+=[^ ]+( \\w+=[^ ]+)*)$",
+          Seq("kvpairs"))),
+        sourceCol = "text", onError = OnError.Send),
+      enrich = Some(EnrichFile(Seq("tool"), "upsert", None)),
+      routes = RoutesFile(matchOnce = false, default = "default", table = Seq(
+        RouteFileSpec("tool_calls", """tool != "" and attributes["tool_name"] != nil"""),
+        RouteFileSpec("errors",
+          """attributes["level"] == "ERROR" or attributes["level"] == "FATAL""""),
+        RouteFileSpec("user_turns", """role == "user""""))),
+      metrics = Seq(
+        MetricFileSpec("turn_count"),
+        MetricFileSpec("turn_count_by_role", attributes = Seq(MetricAttr("role"))),
+        MetricFileSpec("tool_call_count", Seq("""tool != """""),
+          Seq(MetricAttr("tool"), MetricAttr("cost_class", Some("unknown")))),
+        MetricFileSpec("error_count_by_component",
+          Seq("""attributes["level"] == "ERROR""""), Seq(MetricAttr("component")))),
       window = "1 hour")
+  }
 
   test("golden fixture loads to the programmatic flagship config (confmap.go)") {
     assert(ConfigLoader.load(goldenYaml) == flagshipFileConfig)
+    assert(Pipeline.flagshipFile == flagshipFileConfig)
   }
 
   test("render ∘ load = identity (YAML round-trip)") {
@@ -189,12 +208,16 @@ class ConfigLoaderSpec extends SparkSpec {
   test("compiled config drives the flagship: identical sinks and counts") {
     val turns = TranscriptSynth.generate(spark,
       TranscriptSynth.Config(nTurns = 3000, nConvs = 30)).cache()
-    val compiled = ConfigLoader.compile(ConfigLoader.load(goldenYaml))
+    val compiled = Pipeline.flagship
+    // the same flagship with its routes and metrics as hand-written
+    // Columns instead of compiled condition strings
+    val byHand = compiled.copy(routeTable = FlagshipOracle.routeTableByHand,
+      metrics = FlagshipOracle.metricsByHand)
 
     def key(df: DataFrame) = df.select("conv_id", "turn_idx")
       .collect().map(r => (r.getString(0), r.getInt(1))).toSet
     val (sinksCfg, countsCfg) = compiled.run(spark, turns)
-    val (sinksRef, countsRef) = Pipeline.run(spark, turns)
+    val (sinksRef, countsRef) = byHand.run(spark, turns)
     assert(sinksCfg.keySet == sinksRef.keySet)
     sinksRef.keys.foreach { name =>
       assert(key(sinksCfg(name)) == key(sinksRef(name)), s"sink $name differs")
@@ -206,16 +229,16 @@ class ConfigLoaderSpec extends SparkSpec {
     }
 
     // the config file's metric table over the enriched frame ≡ the
-    // programmatic metric table (GoldenCountSpec covers the semantics;
+    // hand-written metric table (GoldenCountSpec covers the semantics;
     // this pins the YAML -> MetricSpec path)
-    val enriched = Pipeline.parseEnrich(spark, turns).cache()
+    val enriched = compiled.parseEnrich(spark, turns).cache()
     val fromCfg = compiled.countMetrics(enriched)
-    Pipeline.metrics.foreach { m =>
-      val ref = graft.agg.CountStage.countWindowed(enriched, m, col("ts"),
-        "1 hour", Pipeline.resolveAttr(Pipeline.parsedFields))
-      val a = fromCfg(m.name).collect().map(_.toSeq).toSet
-      val b = ref.collect().map(_.toSeq).toSet
-      assert(a == b, s"metric ${m.name} differs")
+    val ref = byHand.countMetrics(enriched)
+    assert(fromCfg.keySet == ref.keySet && ref.size == 4)
+    ref.foreach { case (name, df) =>
+      val a = fromCfg(name).collect().map(_.toSeq).toSet
+      val b = df.collect().map(_.toSeq).toSet
+      assert(a.nonEmpty && a == b, s"metric $name differs")
     }
   }
 }

@@ -98,6 +98,14 @@ class OttlSpec extends SparkSpec {
     assert(eval1[Long](Ottl.fnv1a64(lit("foobar"))) == 0x85944171f73967e8L)
   }
 
+  test("UUID: canonical v4 form, fresh per row") {
+    val ids = Seq.tabulate(50)(Tuple1(_)).toDF("i")
+      .select(Ottl.ottlUuid().as("u")).as[String].collect()
+    assert(ids.forall(_.matches(
+      "^[0-9a-f]{8}-[0-9a-f]{4}-4[0-9a-f]{3}-[89ab][0-9a-f]{3}-[0-9a-f]{12}$")))
+    assert(ids.distinct.length == ids.length)
+  }
+
   test("time: parse, truncate, unix epoch family, duration") {
     val t = Ottl.timeParse(lit("2024-03-05 06:07:08"), "yyyy-MM-dd HH:mm:ss")
     assert(eval1[Long](Ottl.unixSeconds(t)) == 1709618828L)

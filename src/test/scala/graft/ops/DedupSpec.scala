@@ -85,6 +85,31 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("near-dup ops: caller id columns named like internal ones do not collide") {
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val want = pairs(Dedup.nearDupMinhashLsh(corpus, "doc_id", "text", threshold = 0.5))
+    assert(want.nonEmpty)
+    // idCol = "id", and an unrelated caller column named "id"
+    assert(pairs(Dedup.nearDupMinhashLsh(corpus.withColumnRenamed("doc_id", "id"),
+      "id", "text", threshold = 0.5)) == want)
+    assert(pairs(Dedup.nearDupMinhashLsh(corpus.withColumn("id", lit(0L)),
+      "doc_id", "text", threshold = 0.5)) == want)
+
+    val bench = corpus.filter(col("doc_id") < 5)
+      .select((col("doc_id") + 1000L).as("bench_id"), col("text"))
+    def hits(docs: org.apache.spark.sql.DataFrame, idCol: String, benchIdCol: String) =
+      Dedup.contaminationNearDup(docs, idCol, "text",
+          bench.withColumnRenamed("bench_id", benchIdCol), benchIdCol, "text",
+          shingleSize = 1, threshold = 0.5)
+        .select(col(idCol), col(benchIdCol)).as[(Long, Long)].collect().toSet
+    val wantHits = hits(corpus, "doc_id", "bench_id")
+    assert(wantHits.nonEmpty)
+    assert(hits(corpus.withColumnRenamed("doc_id", "doc_id_c"), "doc_id_c",
+      "bench_id_c") == wantHits)
+    assert(hits(corpus.withColumnRenamed("doc_id", "id"), "id", "bench_id") == wantHits)
+  }
+
   test("simhash: hamming 0 for identical, small for near-dup, large for random") {
     val sigs = corpus.select(col("doc_id"), Dedup.simhash64(col("text")).as("sig"))
       .as[(Long, Long)].collect().toMap
