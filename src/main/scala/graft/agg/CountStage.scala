@@ -29,20 +29,27 @@ object CountStage {
     case None    => resolve(a.key).as(a.key)
   }
 
-  /** Count metric over a static frame (no window). `resolve` maps an
-    * attribute key to its column (top-level column, map entry, …). */
-  def count(df: DataFrame, spec: MetricSpec,
-            resolve: String => Column = col): DataFrame = {
+  /** The rows a metric counts: any of its conditions holds (OR-ed, a
+    * null result is false), and every required attribute (no default)
+    * is present — rows missing one are skipped. */
+  private def counted(df: DataFrame, spec: MetricSpec,
+                      resolve: String => Column): DataFrame = {
     val conditioned = spec.conditions.reduceOption(_ || _) match {
       case Some(c) => df.filter(coalesce(c, lit(false)))
       case None    => df
     }
-    // required attrs (no default): skip rows where missing
     val required = spec.attrs.filter(_.default.isEmpty)
-    val skipped = required.foldLeft(conditioned)((d, a) => d.filter(resolve(a.key).isNotNull))
+    required.foldLeft(conditioned)((d, a) => d.filter(resolve(a.key).isNotNull))
+  }
+
+  /** Count metric over a static frame (no window). `resolve` maps an
+    * attribute key to its column (top-level column, map entry, …). */
+  def count(df: DataFrame, spec: MetricSpec,
+            resolve: String => Column = col): DataFrame = {
+    val rows = counted(df, spec, resolve)
     val keys = spec.attrs.map(a => attrCol(a, resolve))
-    if (keys.isEmpty) skipped.agg(sqlCount(lit(1)).as(spec.name))
-    else skipped.groupBy(keys: _*).agg(sqlCount(lit(1)).as(spec.name))
+    if (keys.isEmpty) rows.agg(sqlCount(lit(1)).as(spec.name))
+    else rows.groupBy(keys: _*).agg(sqlCount(lit(1)).as(spec.name))
   }
 
   /** Windowed (tumbling, event-time) variant — the batch rendering of the
@@ -51,14 +58,9 @@ object CountStage {
   def countWindowed(df: DataFrame, spec: MetricSpec, tsCol: Column,
                     windowDuration: String,
                     resolve: String => Column = col): DataFrame = {
-    val conditioned = spec.conditions.reduceOption(_ || _) match {
-      case Some(c) => df.filter(coalesce(c, lit(false)))
-      case None    => df
-    }
-    val required = spec.attrs.filter(_.default.isEmpty)
-    val skipped = required.foldLeft(conditioned)((d, a) => d.filter(resolve(a.key).isNotNull))
+    val rows = counted(df, spec, resolve)
     val keys = window(tsCol, windowDuration) +: spec.attrs.map(a => attrCol(a, resolve))
-    skipped.groupBy(keys: _*).agg(sqlCount(lit(1)).as(spec.name))
+    rows.groupBy(keys: _*).agg(sqlCount(lit(1)).as(spec.name))
       .withColumn("window_start", col("window.start"))
       .drop("window")
   }

@@ -290,22 +290,19 @@ object ConfigLoader {
       }
     }
 
-    /** Full run: (per-sink frames, per-sink windowed counts). Counts
-      * derive from ONE exploded-tag pass (a count per fanOut frame would
-      * re-scan the source and re-evaluate the pattern bank once per
-      * sink — 2k scans for k sinks when a caller materializes
-      * everything); a caller that writes the lazy sink frames pays one
-      * scan each, or uses [[graft.run.PipelineJob]]'s one-scan fan-out. */
+    /** Full run: (per-sink frames, per-sink windowed counts), each a
+      * filter of ONE `RouteStage.routed` frame, so sinks and counts share
+      * the table's match semantics; a caller that writes the lazy sink
+      * frames pays one scan each, or uses [[graft.run.PipelineJob]]'s
+      * one-scan sink table. */
     def run(spark: SparkSession, transcripts: DataFrame)
         : (Map[String, DataFrame], Map[String, DataFrame]) = {
-      val enriched = parseEnrich(spark, transcripts)
-      val (sinks, stream) = RouteStage.sinksAndStream(enriched, routeTable)
-      val counts = sinks.keySet.map { name =>
-        name -> CountStage.countWindowed(
-          stream.filter(col("route") === name),
-          MetricSpec("count"), col("ts"), window, resolveAttr)
-      }.toMap
-      (sinks, counts)
+      val routed = RouteStage.routed(parseEnrich(spark, transcripts), routeTable)
+      def rows(name: String) = routed.filter(col("route") === name)
+      val names = routeTable.sinkNames
+      (names.map(n => n -> rows(n).drop("route")).toMap,
+       names.map(n => n -> CountStage.countWindowed(
+         rows(n), MetricSpec("count"), col("ts"), window, resolveAttr)).toMap)
     }
 
     /** The config file's metric definitions over one frame. */

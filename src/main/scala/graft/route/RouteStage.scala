@@ -17,13 +17,12 @@ import graft.model.PipelineConfig.RouteTable
   *   - `error_mode=ignore` → a predicate that errors counts as no-match
   *     (we compile predicates null-safe, so nulls fall to default).
   *
-  * Physical strategy at 100 TB:
-  *   - `matchOnce`: ONE pass — tag each row with a `route` column via a
-  *     short-circuiting CASE chain, then a single write with
-  *     `partitionBy("route")`. No per-sink rescan.
-  *   - multi-match: one filtered write per sink from a cached upstream —
-  *     each sink's predicate is pushed into its own scan; with the
-  *     upstream persisted, the source is read once.
+  * Physical strategy at 100 TB: ONE pass, ONE write. [[routed]] tags
+  * each row with a `route` column under the table's match semantics and
+  * the sink table is a single `partitionBy("route")` write of that frame
+  * — no per-sink rescan, no cache. Batch ([[writeMultiMatch]]) and
+  * streaming (`StreamingPipeline.startRoutedSinks`) write the same
+  * `route=<name>` table from it.
   */
 object RouteStage {
 
@@ -55,14 +54,6 @@ object RouteStage {
     sinks + (table.defaultName -> df.filter(noMatch))
   }
 
-  /** Single-pass partitioned write for the match_once plan: the
-    * `df.write.partitionBy("route")` path — one scan, one shuffle-free
-    * write, route directories as sink tables. */
-  def writeMatchOnce(df: DataFrame, table: RouteTable, outDir: String,
-                     format: String = "parquet"): Unit =
-    tagged(df, table).write.format(format).mode("overwrite")
-      .partitionBy("route").save(outDir)
-
   /** Array of ALL matching route names per row (empty → default) — the
     * multi-match verdict as data. */
   def routesArray(table: RouteTable): Column = {
@@ -83,27 +74,26 @@ object RouteStage {
   def tagsExploded(df: DataFrame, table: RouteTable): DataFrame =
     df.withColumn("route", explode(routesArray(table)))
 
+  /** The routed frame every sink table is written from, under the
+    * table's match semantics: first-match [[tagged]] under `match_once`
+    * (`logs.go:87`), multi-match [[tagsExploded]] otherwise. The only
+    * reader of `matchOnce`. `route` is the tag column, so an input that
+    * already carries one (e.g. from a user enrich dim) is rejected here,
+    * at plan time, instead of being silently overwritten. */
+  def routed(df: DataFrame, table: RouteTable): DataFrame = {
+    require(!df.columns.exists(_.equalsIgnoreCase("route")),
+      "input already has a 'route' column, which is reserved for the route " +
+      s"tag; rename it upstream (columns: ${df.columns.mkString(", ")})")
+    if (table.matchOnce) tagged(df, table) else tagsExploded(df, table)
+  }
+
+  /** The sink table: ONE write of the [[routed]] frame, one
+    * `route=<name>` directory per sink (despite the name, it honours
+    * `match_once`). */
   def writeMultiMatch(df: DataFrame, table: RouteTable, outDir: String,
                       format: String = "parquet"): Unit =
-    tagsExploded(df, table).write.format(format).mode("overwrite")
+    routed(df, table).write.format(format).mode("overwrite")
       .partitionBy("route").save(outDir)
-
-  /** Per-sink frames + the single-scan tagged stream, honoring the
-    * table's match semantics in ONE place (match_once → first-match
-    * single tag, `routingconnector/logs.go:87`; default → multi-match
-    * explosion). The materialized run path (Compiled.run, which the
-    * flagship shares) routes through here: the run paths previously
-    * each hard-coded the multi-match pair, so a `match_once: true`
-    * config silently got fan-out duplicates in every matching sink and
-    * doubled every per-route count. Counts derived from the returned
-    * stream agree with the sinks by construction. */
-  def sinksAndStream(df: DataFrame, table: RouteTable)
-      : (Map[String, DataFrame], DataFrame) =
-    if (table.matchOnce) {
-      val t = tagged(df, table)
-      val names = table.routes.map(_.name) :+ table.defaultName
-      (names.map(n => n -> t.filter(col("route") === n).drop("route")).toMap, t)
-    } else (fanOut(df, table), tagsExploded(df, table))
 
   /** Route-to-multiple-pipelines fan-out (`connector/routingconnector/
     * config.go:70-82` Pipelines lists; delivery grouped per consumer so a

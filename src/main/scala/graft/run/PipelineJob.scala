@@ -74,15 +74,7 @@ object PipelineJob {
     val sinksDir = s"$outDir/sinks"
     if (!Lineage.isCommitted(outDir, "sinks_fanout", fpFanout)) {
       val turns = table.read(spark, inPath)
-      val enriched = parseEnrich(turns)
-      // honor the table's match semantics: match_once = first-match-wins
-      // single-tag write (routingconnector logs.go:87), default =
-      // multi-match fan-out — a match_once config silently getting
-      // fan-out duplicates would inflate every per-route count
-      if (routeTable.matchOnce)
-        RouteStage.writeMatchOnce(enriched, routeTable, sinksDir)
-      else
-        RouteStage.writeMultiMatch(enriched, routeTable, sinksDir)
+      RouteStage.writeMultiMatch(parseEnrich(turns), routeTable, sinksDir)
       // per-route per-file lineage from the ACTUAL committed partition
       // dirs (listed, not reconstructed from route names: Spark
       // URI-escapes special characters in partition paths — a route
@@ -111,7 +103,7 @@ object PipelineJob {
     // a ZERO-row input commits a fan-out with no part files; reading the
     // bare dir would then fail schema inference — and since the stage IS
     // committed, every resume would crash the same way. Fall back to an
-    // empty frame with the fan-out's schema (tagged ≡ exploded schema).
+    // empty frame with the fan-out's schema.
     val sinksHavePartFiles = {
       val dir = new org.apache.hadoop.fs.Path(sinksDir)
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -120,10 +112,9 @@ object PipelineJob {
     }
     val written =
       if (sinksHavePartFiles) spark.read.parquet(sinksDir)
-      else RouteStage.tagged(
-        parseEnrich(table.read(spark, inPath)).limit(0), routeTable)
-    val routeCounts = routeTable.routes.map(_.name)
-      .:+(routeTable.defaultName).map { route =>
+      else spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+        RouteStage.routed(parseEnrich(table.read(spark, inPath)), routeTable).schema)
+    val routeCounts = routeTable.sinkNames.map { route =>
         s"counts_$route" -> CountStage.countWindowed(
           written.filter(col("route") === route),
           MetricSpec("count", attrs = Seq(graft.model.PipelineConfig.AttrSpec("role"))),

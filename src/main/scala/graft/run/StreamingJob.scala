@@ -19,10 +19,14 @@ import graft.streaming.StreamingPipeline
   * route-table match semantics (match_once → first-match single tag,
   * default → multi-match fan-out), driving:
   *
-  *   - `outDir/sinks/<route>/batch_id=N` — the per-route sink tables via
-  *     [[StreamingPipeline.startRoutedSinksMultiplexed]]: ONE upstream
-  *     pass per micro-batch, k filtered writes, per-batch overwrite
-  *     idempotence (exactly-once on replay);
+  *   - `outDir/sinks/route=<name>/batch_id=N` — the sink table
+  *     [[PipelineJob]] writes (`sinks/route=<name>/`, from the same
+  *     `RouteStage.routed` frame) plus a per-micro-batch level, via
+  *     [[StreamingPipeline.startRoutedSinks]]: ONE write per micro-batch,
+  *     per-batch overwrite idempotence (exactly-once on replay);
+  *     `spark.read.parquet(outDir/sinks)` reads it like the batch table.
+  *     An out dir holding the older per-name layout
+  *     (`sinks/<name>/batch_id=N`) is refused at start;
   *   - `outDir/counts` — the streaming count connector
   *     ([[StreamingPipeline.windowedCounts]]): per-(window, route, role)
   *     counts under a watermark, append-finalized — state is bounded by
@@ -85,6 +89,8 @@ object StreamingJob {
   def start(spark: SparkSession, inPath: String, outDir: String,
             fileCfg: Option[graft.config.ConfigLoader.Compiled],
             windowDur: String, lateness: String, once: Boolean): Handles = {
+    val sinksDir = s"$outDir/sinks"
+    requireRouteLayout(spark, sinksDir)
     // file streaming sources need an explicit schema — take it from the
     // files already present (the table's shape is the input_hint
     // contract, so this is a metadata-only footer read). A resident
@@ -98,24 +104,16 @@ object StreamingJob {
     val stream = spark.readStream.schema(schema).parquet(inPath)
 
     val cfg = fileCfg.getOrElse(Pipeline.flagship)
-    val routeTable = cfg.routeTable
     val enriched = cfg.parseEnrich(spark, stream)
-    // honor the table's match semantics exactly like PipelineJob: a
-    // match_once config silently getting fan-out duplicates would
-    // inflate every per-route count
-    val tagged =
-      if (routeTable.matchOnce) RouteStage.tagged(enriched, routeTable)
-      else RouteStage.tagsExploded(enriched, routeTable)
+    val routed = RouteStage.routed(enriched, cfg.routeTable)
     val trig = if (once) Some(Trigger.AvailableNow()) else None
 
-    val sinkNames = routeTable.routes.map(_.name) :+ routeTable.defaultName
-    val qSinks = StreamingPipeline.startRoutedSinksMultiplexed(
-      tagged, sinkNames, s"$outDir/sinks", s"$outDir/_ck/sinks", trig)
+    val qSinks = StreamingPipeline.startRoutedSinks(
+      routed, sinksDir, s"$outDir/_ck/sinks", trig)
 
     // the streaming count connector over the SAME tag column (two
     // queries = two upstream passes — mirroring the batch path, where
-    // counts also derive from their own exploded-tag pass; the sink
-    // query's multiplexer keeps ITS pass single regardless of k). One
+    // counts also derive from their own routed pass). One
     // (window, route, role) table — the streaming rendering of
     // PipelineJob's per-route `counts_<route>` tables, route as a column
     def startAppend(df: org.apache.spark.sql.DataFrame, path: String,
@@ -129,7 +127,7 @@ object StreamingJob {
         .format("parquet")
         .start()
     val qCounts = startAppend(
-      StreamingPipeline.windowedCounts(tagged, windowDur, lateness,
+      StreamingPipeline.windowedCounts(routed, windowDur, lateness,
         Seq("route", "role")),
       s"$outDir/counts", s"$outDir/_ck/counts")
 
@@ -138,9 +136,7 @@ object StreamingJob {
     // PRE-fan-out enriched frame — multi-match explosion duplicates
     // rows per route and would double-count global metrics. Metrics are
     // a config-sized set, so one streaming query per metric (each its
-    // own checkpoint/table, independently restartable — the per-query
-    // variant's isolation is the RIGHT trade here, unlike the k-sink
-    // ingest path).
+    // own checkpoint/table, independently restartable).
     val wmEnriched = enriched.withWatermark("ts", lateness)
     val metricFrames: Seq[(String, org.apache.spark.sql.DataFrame)] =
       fileCfg.filter(_.metrics.nonEmpty) match {
@@ -151,5 +147,23 @@ object StreamingJob {
       name -> startAppend(df, s"$outDir/metric_$name", s"$outDir/_ck/metric_$name")
     }
     Handles(qSinks, qCounts, qMetrics)
+  }
+
+  /** Refuses a sinks dir in the older per-name layout
+    * (`sinks/<name>/batch_id=N`, written before stream and batch shared
+    * the `route=` table): a relaunch over it would mix the two layouts
+    * under one reader, so it fails loudly at start instead. */
+  private def requireRouteLayout(spark: SparkSession, sinksDir: String): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(sinksDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val foreign =
+      if (!fs.exists(dir)) Seq.empty
+      else fs.listStatus(dir).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+        .filterNot(n => n.startsWith(".") || n.startsWith("_") || n.startsWith("route="))
+    require(foreign.isEmpty,
+      s"$sinksDir holds sink directories outside the route=<name> layout " +
+      s"(${foreign.mkString(", ")}), written by an older StreamingJob; move the " +
+      "old outputs aside (the sinks dir, and _ck to re-ingest every file) " +
+      "before relaunching")
   }
 }

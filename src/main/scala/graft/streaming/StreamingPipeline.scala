@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.model.Turn
 
@@ -650,102 +650,38 @@ object StreamingPipeline {
         col("server_service"), col("connection_type"), col("n_edges"),
         col("n_failed"))
 
-  /** Streaming route fan-out: one query per sink, all fed from the same
-    * tagged stream; checkpointLocation per sink gives exactly-once
-    * delivery (the streaming rendering of routing-connector fan-out).
-    *
-    * SCALE CAVEAT: Structured Streaming shares nothing between
-    * `.start()` calls, so the upstream (source read + parse + enrich +
-    * tagging) re-executes once PER SINK — k× the ingest IO and parse
-    * CPU. Fine for a handful of sinks on a modest stream; at high
-    * volume use [[startRoutedSinksMultiplexed]] (same per-sink
-    * directory layout, one upstream pass) or
-    * [[startRoutedSinksSingleScan]] (one partitioned table). This
-    * variant's advantage is per-sink isolation (independent
-    * checkpoints/restarts, exactly-once via the streaming file sink). */
-  def startRoutedSinks(tagged: DataFrame, sinkNames: Seq[String],
-                       outDir: String, checkpointDir: String): Seq[org.apache.spark.sql.streaming.StreamingQuery] =
-    sinkNames.map { name =>
-      tagged.filter(col("route") === name)
-        .writeStream
-        .format("parquet")
-        .option("path", s"$outDir/$name")
-        .option("checkpointLocation", s"$checkpointDir/$name")
-        .outputMode(OutputMode.Append)
-        .start()
-    }
-
-  /** Single-scan streaming fan-out: ONE query, each micro-batch written
-    * once with `partitionBy("route")` (source scanned and parsed exactly
-    * once regardless of sink count). Routing semantics are fixed by how
-    * the caller built the `route` column: `RouteStage.tagged` gives
-    * first-match-wins (match_once), `RouteStage.tagsExploded` gives
-    * multi-match fan-out — only the latter is the streaming rendering of
-    * the batch path's `writeMultiMatch` (explode is streaming-safe, so
-    * both compose with this sink). Exactly-once: each batch writes
-    * under its own `batch_id=<id>` partition with overwrite, so a
-    * replayed batch after failure REPLACES its own output instead of
-    * appending duplicates. Readers see one partitioned table:
-    * `spark.read.parquet(outDir).filter($"route" === name)` prunes to
-    * the route's directories (partition discovery covers both levels).
-    */
-  def startRoutedSinksSingleScan(tagged: DataFrame, outDir: String,
-                                 checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    tagged.writeStream
+  /** The streaming sink table: ONE query, ONE write per micro-batch —
+    * the streaming rendering of the reference routing connector's
+    * group-then-forward step (each batch is grouped by matched route
+    * once, `connector/routingconnector/logs.go:62-103`). `routed` is
+    * `RouteStage.routed` over the stream, so the rows and the
+    * `outDir/route=<name>/` layout are the batch path's
+    * (`RouteStage.writeMultiMatch`), with one `batch_id=<id>` level
+    * below each route; `spark.read.parquet(outDir)` reads both.
+    * `batch_id` is reserved for that level: an input carrying it is
+    * rejected at start instead of being overwritten. */
+  def startRoutedSinks(routed: DataFrame, outDir: String, checkpointDir: String,
+                       trigger: Option[Trigger] = None): StreamingQuery = {
+    require(!routed.columns.exists(_.equalsIgnoreCase("batch_id")),
+      "routed stream already has a 'batch_id' column, which is reserved for " +
+      s"the sink table's batch partition (columns: ${routed.columns.mkString(", ")})")
+    trigger.foldLeft(routed.writeStream)(_.trigger(_))
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite")
-          .partitionBy("route")
-          .parquet(s"$outDir/batch_id=$batchId")
-      }
+      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
+        writeRoutedBatch(batch, batchId, outDir))
       .start()
+  }
 
-  /** foreachBatch MULTIPLEXER: ONE streaming query, one upstream pass
-    * per micro-batch, k filtered writes to per-sink directories — the
-    * streaming rendering of the reference routing connector's
-    * group-then-forward economy (it groups each incoming plog batch by
-    * matched route once, then forwards the per-route groups to their
-    * consumers — `connector/routingconnector/logs.go:62-103` — rather
-    * than re-reading the source per route, which is exactly what
-    * [[startRoutedSinks]]'s k independent queries do).
-    *
-    * Mechanics: the micro-batch is persisted and materialized ONCE (the
-    * source read + parse + enrich + tagging upstream runs a single
-    * time); each sink's write is a filter over the cached batch — a
-    * narrow cached-scan per sink, no upstream re-execution. Exactly-once
-    * on replay: each batch writes under its own `batch_id=<id>`
-    * subdirectory with overwrite, so a batch replayed after a failure
-    * REPLACES its own output instead of appending duplicates (the
-    * [[startRoutedSinksSingleScan]] idempotence idiom). Readers see the
-    * SAME per-sink layout as the per-query path —
-    * `spark.read.parquet(s"$outDir/<name>")` — with `batch_id` surfaced
-    * as a partition column.
-    *
-    * vs [[startRoutedSinks]]: k× less ingest IO and parse CPU, at the
-    * cost of per-sink checkpoint isolation (one checkpoint drives all
-    * sinks; a poison-pill sink stalls the batch for every route). At
-    * 10^12-turn scale the ingest economy wins — the per-query variant
-    * stays available when a sink needs independent restart cadence. */
-  def startRoutedSinksMultiplexed(tagged: DataFrame, sinkNames: Seq[String],
-                                  outDir: String, checkpointDir: String,
-                                  trigger: Option[org.apache.spark.sql.streaming.Trigger] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    trigger.foldLeft(tagged.writeStream)(_.trigger(_))
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.persist()
-        try {
-          // materialize the cache eagerly: the first action runs the
-          // full upstream; every per-sink filter below then reads the
-          // cached rows only
-          batch.count()
-          sinkNames.foreach { name =>
-            batch.filter(col("route") === name)
-              .write.mode("overwrite")
-              .parquet(s"$outDir/$name/batch_id=$batchId")
-          }
-        } finally batch.unpersist()
-      }
-      .start()
+  /** One micro-batch of [[startRoutedSinks]]. Exactly-once on replay: a
+    * dynamic partition overwrite, so a batch replayed after a failure
+    * replaces its own `batch_id` partitions instead of appending
+    * duplicates, and leaves every other batch's output alone. */
+  private[graft] def writeRoutedBatch(batch: DataFrame, batchId: Long,
+                                      outDir: String): Unit =
+    batch.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("route", "batch_id")
+      .parquet(outDir)
 }

@@ -101,4 +101,51 @@ class RouteStageSpec extends SparkSpec {
         RouteSpec("dup", col("role") === "tool")))
     }
   }
+
+  test("writeMultiMatch under match_once puts each row in exactly one route= partition") {
+    // overlapping routes: a user turn at index 0 matches both
+    val table = RouteTable(Seq(
+      RouteSpec("users", col("role") === "user"),
+      RouteSpec("early", col("turn_idx") < 1)), matchOnce = true)
+    assert(enriched.filter(col("role") === "user" && col("turn_idx") < 1).count() > 0)
+    val out = java.nio.file.Files.createTempDirectory("graft_route_once").toString
+    RouteStage.writeMultiMatch(enriched, table, out)
+    val written = spark.read.parquet(out)
+    assert(written.count() == enriched.count())
+    assert(written.select("conv_id", "turn_idx").distinct().count() == enriched.count())
+    val want = RouteStage.tagged(enriched, table)
+    for (name <- table.sinkNames) {
+      def keys(df: org.apache.spark.sql.DataFrame) = df.filter(col("route") === name)
+        .select("conv_id", "turn_idx").collect().map(r => (r.getString(0), r.getInt(1))).toSet
+      assert(keys(written) == keys(want), s"route $name")
+    }
+  }
+
+  test("an enrich dim carrying a route column is rejected, not overwritten by the tag") {
+    import spark.implicits._
+    val dimPath = java.nio.file.Files.createTempDirectory("graft_dim_route").toString + "/dim"
+    Seq(("bash", "shadow"), ("", "shadow")).toDF("tool", "route").write.parquet(dimPath)
+    val cfg = graft.config.ConfigLoader.compile(graft.config.ConfigLoader.load(
+      s"""parse:
+         |  patterns: []
+         |enrich:
+         |  keys: [tool]
+         |  dim_path: $dimPath
+         |routes:
+         |  table:
+         |    - name: users
+         |      where: 'role == "user"'
+         |""".stripMargin))
+    val withDim = cfg.parseEnrich(spark, TranscriptSynth.generate(spark,
+      TranscriptSynth.Config(nTurns = 50, nConvs = 2)))
+    val out = java.nio.file.Files.createTempDirectory("graft_route_dim").toString
+    val e = intercept[IllegalArgumentException] {
+      RouteStage.writeMultiMatch(withDim, cfg.routeTable, out)
+    }
+    assert(e.getMessage.contains("'route'"))
+    // the check is case-insensitive, like Spark's column resolution
+    intercept[IllegalArgumentException] {
+      RouteStage.routed(enriched.withColumn("Route", lit(1)), Pipeline.routeTable)
+    }
+  }
 }

@@ -33,6 +33,11 @@ class StreamingJobSpec extends SparkSpec {
       """CALL tool=search args={"q":1} dur_ms=5""", "search", ts(2, 30)),
     Turn("c3", 1, "user", "user=3 action=msg cents=2", "", ts(2, 40)))
 
+  private def routeRows(df: DataFrame, route: String): Seq[String] = {
+    val f = df.filter(col("route") === route)
+    f.select(f.columns.sorted.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
+  }
+
   test("service starts on an empty input dir (schema falls back to the input_hint shape)") {
     val inDir = Files.createTempDirectory("graft_sj_empty_in").toString
     val outDir = Files.createTempDirectory("graft_sj_empty_out").toString
@@ -50,12 +55,8 @@ class StreamingJobSpec extends SparkSpec {
     // them up on the next drain and the fan-out matches batch
     part1.toDS().toDF().write.mode("append").parquet(inDir)
     drain()
-    val sinkNames =
-      Pipeline.routeTable.routes.map(_.name) :+ Pipeline.routeTable.defaultName
-    val gotRows = sinkNames.map { n =>
-      try spark.read.parquet(s"$outDir/sinks/$n").count() catch { case _: Throwable => 0L }
-    }.sum
-    val wantRows = RouteStage.tagsExploded(
+    val gotRows = spark.read.parquet(s"$outDir/sinks").count()
+    val wantRows = RouteStage.routed(
       Pipeline.parseEnrich(spark, part1.toDS().toDF()), Pipeline.routeTable).count()
     assert(wantRows > 0 && gotRows == wantRows,
       s"post-empty-start drain must fan out like batch: got $gotRows want $wantRows")
@@ -80,28 +81,21 @@ class StreamingJobSpec extends SparkSpec {
       finally hs.all.foreach(_.stop())
     }
     def batchTagged(rows: Seq[Turn]): DataFrame =
-      RouteStage.tagsExploded(
+      RouteStage.routed(
         Pipeline.parseEnrich(spark, rows.toDS().toDF()), Pipeline.routeTable)
-    def sinkRows(name: String): Seq[String] = {
-      val df = spark.read.parquet(s"$outDir/sinks/$name").drop("batch_id")
-      val cols = df.columns.sorted.map(col).toSeq
-      df.select(cols: _*).collect().map(_.toString).sorted.toSeq
-    }
-    def batchRows(df: DataFrame, name: String): Seq[String] = {
-      val f = df.filter(col("route") === name)
-      val cols = f.columns.sorted.map(col).toSeq
-      f.select(cols: _*).collect().map(_.toString).sorted.toSeq
-    }
-    val sinkNames = Pipeline.routeTable.routes.map(_.name) :+
-      Pipeline.routeTable.defaultName
+    def sinkRows(name: String): Seq[String] =
+      routeRows(spark.read.parquet(s"$outDir/sinks").drop("batch_id"), name)
+    val sinkNames = Pipeline.routeTable.sinkNames
 
     // run 1 over part 1
     part1.toDS().toDF().write.mode("append").parquet(inDir)
     drain()
     val b1 = batchTagged(part1)
-    sinkNames.filter(n => batchRows(b1, n).nonEmpty).foreach { n =>
-      assert(sinkRows(n) === batchRows(b1, n), s"run-1 sink $n")
+    sinkNames.filter(n => routeRows(b1, n).nonEmpty).foreach { n =>
+      assert(sinkRows(n) === routeRows(b1, n), s"run-1 sink $n")
     }
+    // the batch sink layout plus one batch level: sinks/route=<name>/batch_id=<id>/
+    assert(Files.isDirectory(java.nio.file.Path.of(s"$outDir/sinks/route=user_turns/batch_id=0")))
     // hour-0 windows are NOT finalized yet (watermark ≤ 00:20)
     val counts1 =
       if (Files.exists(java.nio.file.Path.of(s"$outDir/counts")))
@@ -113,14 +107,14 @@ class StreamingJobSpec extends SparkSpec {
     part2.toDS().toDF().write.mode("append").parquet(inDir)
     drain()
     val bAll = batchTagged(part1 ++ part2)
-    sinkNames.filter(n => batchRows(bAll, n).nonEmpty).foreach { n =>
-      assert(sinkRows(n) === batchRows(bAll, n), s"run-2 sink $n")
+    sinkNames.filter(n => routeRows(bAll, n).nonEmpty).foreach { n =>
+      assert(sinkRows(n) === routeRows(bAll, n), s"run-2 sink $n")
     }
     // incremental proof: the sinks hold each part-1 row exactly once —
     // if run 2 had re-read part 1's files, the per-batch overwrite
     // layout would hold duplicates under a NEW batch_id
     assert(sinkRows("user_turns").size ===
-      batchRows(bAll, "user_turns").size)
+      routeRows(bAll, "user_turns").size)
 
     // part-1 windows finalized by part 2's event time (02:40 - 10 min
     // watermark ≫ 01:00 window end); compare against the batch
@@ -154,5 +148,50 @@ class StreamingJobSpec extends SparkSpec {
       .filter(_._1.before(ts(2)))
     assert(wantMetric.nonEmpty)
     assert(gotMetric === wantMetric)
+  }
+
+  test("match_once config: the drained route= table ≡ the batch routed frame, one route per row") {
+    val inDir = Files.createTempDirectory("graft_sj_once_in").toString
+    val outDir = Files.createTempDirectory("graft_sj_once_out").toString
+    // c1/0 matches BOTH routes: first-match-wins must land it in `users`
+    // only, where multi-match would also put it in `early`
+    val cfg = graft.config.ConfigLoader.compile(graft.config.ConfigLoader.load(
+      """parse:
+        |  patterns: []
+        |routes:
+        |  match_once: true
+        |  table:
+        |    - name: users
+        |      where: 'role == "user"'
+        |    - name: early
+        |      where: 'turn_idx < 1'
+        |""".stripMargin))
+    part1.toDS().toDF().write.mode("append").parquet(inDir)
+    val hs = StreamingJob.start(spark, inDir, outDir, fileCfg = Some(cfg),
+      windowDur = "1 hour", lateness = "10 minutes", once = true)
+    try hs.all.foreach(_.awaitTermination())
+    finally hs.all.foreach(_.stop())
+
+    val got = spark.read.parquet(s"$outDir/sinks").drop("batch_id")
+    val want = RouteStage.routed(cfg.parseEnrich(spark, part1.toDS().toDF()), cfg.routeTable)
+    assert(got.count() === part1.size)
+    cfg.routeTable.sinkNames.foreach { n =>
+      assert(routeRows(got, n) === routeRows(want, n), s"route $n")
+    }
+    assert(routeRows(got, "users").size === 2 && routeRows(got, "early").isEmpty)
+  }
+
+  test("relaunch over the older per-name sink layout fails loudly at start") {
+    val inDir = Files.createTempDirectory("graft_sj_old_in").toString
+    val outDir = Files.createTempDirectory("graft_sj_old_out").toString
+    // what a stream wrote before the shared route= layout
+    Files.createDirectories(java.nio.file.Path.of(s"$outDir/sinks/user_turns/batch_id=0"))
+    val e = intercept[IllegalArgumentException] {
+      StreamingJob.start(spark, inDir, outDir, fileCfg = None,
+        windowDur = "1 hour", lateness = "10 minutes", once = true)
+    }
+    assert(e.getMessage.contains("user_turns") && e.getMessage.contains("move the old outputs aside"))
+    assert(!Files.exists(java.nio.file.Path.of(s"$outDir/_ck")),
+      "no query may start over a mixed layout")
   }
 }

@@ -414,103 +414,81 @@ class StreamingPipelineSpec extends SparkSpec {
     assert(m(("assistant", "unknown", "expired_no_server")) == ((1L, 0L)))
   }
 
-  test("routed streaming sinks deliver disjoint route partitions") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    val tagged = graft.route.RouteStage.tagged(
-      graft.run.Pipeline.parseEnrich(spark, mem.toDF()), graft.run.Pipeline.routeTable)
-    val outDir = Files.createTempDirectory("graft_stream_out").toString
-    val ckDir = Files.createTempDirectory("graft_stream_ck").toString
-    val qs = StreamingPipeline.startRoutedSinks(
-      tagged, Seq("user_turns", "default"), outDir, ckDir)
-    try {
-      mem.addData(
-        Turn("c1", 0, "user", "user=1 action=msg cents=5", "", ts(1)),
-        Turn("c1", 1, "system", "INFO [comp-1] signup user=1", "", ts(2)))
-      qs.foreach(_.processAllAvailable())
-      val user = spark.read.parquet(s"$outDir/user_turns")
-      val dflt = spark.read.parquet(s"$outDir/default")
-      assert(user.count() == 1 && dflt.count() == 1)
-    } finally qs.foreach(_.stop())
+  private val routedTurns = Seq(
+    Turn("c1", 0, "user", "user=1 action=msg cents=5", "", ts(1)),
+    Turn("c1", 1, "system", "INFO [comp-1] signup user=1", "", ts(2)),
+    Turn("c2", 0, "user", "user=2 action=msg cents=9", "", ts(3)))
+
+  /** The batch sink frame: `RouteStage.routed` over the flagship. */
+  private def batchRouted(turns: Seq[Turn]) = graft.route.RouteStage.routed(
+    graft.run.Pipeline.parseEnrich(spark, turns.toDS().toDF()), graft.run.Pipeline.routeTable)
+
+  private def routeRows(df: org.apache.spark.sql.DataFrame, route: String): Seq[String] = {
+    val f = df.filter(col("route") === route)
+    f.select(f.columns.sorted.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
   }
 
-  test("single-scan routed sink: one query, per-batch partitioned table, route pruning") {
+  test("routed streaming sink: one upstream pass, route= rows ≡ batch RouteStage.routed") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Turn]
-    val tagged = graft.route.RouteStage.tagged(
-      graft.run.Pipeline.parseEnrich(spark, mem.toDF()), graft.run.Pipeline.routeTable)
-    val outDir = Files.createTempDirectory("graft_stream_single").toString
-    val ckDir = Files.createTempDirectory("graft_stream_single_ck").toString
-    val q = StreamingPipeline.startRoutedSinksSingleScan(tagged, outDir, ckDir)
-    try {
-      mem.addData(
-        Turn("c1", 0, "user", "user=1 action=msg cents=5", "", ts(1)),
-        Turn("c1", 1, "system", "INFO [comp-1] signup user=1", "", ts(2)))
-      q.processAllAvailable()
-      mem.addData(Turn("c2", 0, "user", "user=2 action=msg cents=9", "", ts(3)))
-      q.processAllAvailable()
-      val all = spark.read.parquet(outDir)
-      // both partition levels discovered; routes complete and disjoint
-      assert(all.columns.contains("route") && all.columns.contains("batch_id"))
-      assert(all.count() == 3)
-      assert(all.filter(col("route") === "user_turns").count() == 2)
-      assert(all.filter(col("route") === "default").count() == 1)
-    } finally q.stop()
-  }
-
-  test("multiplexed routed sink: one upstream pass, per-sink rows ≡ per-query path") {
-    implicit val sqlCtx = spark.sqlContext
-    val turns = Seq(
-      Turn("c1", 0, "user", "user=1 action=msg cents=5", "", ts(1)),
-      Turn("c1", 1, "system", "INFO [comp-1] signup user=1", "", ts(2)),
-      Turn("c2", 0, "user", "user=2 action=msg cents=9", "", ts(3)))
-    val sinks = Seq("user_turns", "default")
-
-    // multiplexed path, with an upstream row counter: the accumulator
-    // rides a nondeterministic filter ABOVE parse+enrich+tagging, so it
-    // counts upstream executions — k per-query sinks would count each
-    // row k times, the multiplexer's single cached materialization
-    // counts it once
+    // the accumulator rides a nondeterministic filter ABOVE parse +
+    // enrich + routing, so it counts upstream executions: one write per
+    // micro-batch must run the upstream once per routed row
     val acc = spark.sparkContext.longAccumulator("upstream_rows")
     val bump = udf { (_: String) => acc.add(1L); true }.asNondeterministic()
     val mem = MemoryStream[Turn]
-    val tagged = graft.route.RouteStage.tagged(
+    val routed = graft.route.RouteStage.routed(
         graft.run.Pipeline.parseEnrich(spark, mem.toDF()), graft.run.Pipeline.routeTable)
       .filter(bump(col("conv_id")))
-    val outDir = Files.createTempDirectory("graft_stream_mux").toString
-    val ckDir = Files.createTempDirectory("graft_stream_mux_ck").toString
-    val q = StreamingPipeline.startRoutedSinksMultiplexed(tagged, sinks, outDir, ckDir)
+    val outDir = Files.createTempDirectory("graft_stream_routed").toString
+    val ckDir = Files.createTempDirectory("graft_stream_routed_ck").toString
+    val q = StreamingPipeline.startRoutedSinks(routed, outDir, ckDir)
     try {
-      mem.addData(turns: _*)
+      mem.addData(routedTurns: _*)
       q.processAllAvailable()
     } finally q.stop()
-    assert(acc.value === turns.size,
-      s"upstream executed ${acc.value.toDouble / turns.size}x, expected once")
+    val want = batchRouted(routedTurns)
+    assert(acc.value === want.count(),
+      s"upstream executed ${acc.value.toDouble / want.count()}x, expected once")
 
-    // per-query reference path on the same input
-    val mem2 = MemoryStream[Turn]
-    val tagged2 = graft.route.RouteStage.tagged(
-      graft.run.Pipeline.parseEnrich(spark, mem2.toDF()), graft.run.Pipeline.routeTable)
-    val outDir2 = Files.createTempDirectory("graft_stream_mux_ref").toString
-    val ckDir2 = Files.createTempDirectory("graft_stream_mux_ref_ck").toString
-    val qs = StreamingPipeline.startRoutedSinks(tagged2, sinks, outDir2, ckDir2)
-    try {
-      mem2.addData(turns: _*)
-      qs.foreach(_.processAllAvailable())
-    } finally qs.foreach(_.stop())
-
-    // routed-row-set equality per sink (batch_id is the multiplexer's
-    // idempotence partition column, not payload — drop it)
-    sinks.foreach { name =>
-      val got = spark.read.parquet(s"$outDir/$name").drop("batch_id")
-      val want = spark.read.parquet(s"$outDir2/$name")
-      assert(got.columns.sorted.toSeq === want.columns.sorted.toSeq)
-      val cols = got.columns.sorted.map(col).toSeq
-      assert(got.select(cols: _*).collect().map(_.toString).sorted.toSeq ===
-        want.select(cols: _*).collect().map(_.toString).sorted.toSeq,
-        s"sink $name diverges from the per-query path")
-      assert(got.count() > 0) // both routes exercised by the fixture
+    // per route, the stream's rows are the batch frame's rows: routes
+    // complete and disjoint (batch_id is the replay partition, not payload)
+    val got = spark.read.parquet(outDir).drop("batch_id")
+    graft.run.Pipeline.routeTable.sinkNames.foreach { n =>
+      assert(routeRows(got, n) === routeRows(want, n), s"route $n diverges from batch")
     }
+    assert(Seq("user_turns", "default").forall(routeRows(want, _).nonEmpty))
+  }
+
+  test("routed streaming sink: route and batch_id levels discovered; a replayed batch id overwrites") {
+    val outDir = Files.createTempDirectory("graft_stream_replay").toString
+    val b0 = batchRouted(routedTurns.take(2))
+    val b1 = batchRouted(routedTurns.drop(2))
+    StreamingPipeline.writeRoutedBatch(b0, 0L, outDir)
+    StreamingPipeline.writeRoutedBatch(b1, 1L, outDir)
+    def counts: Map[(String, Long), Long] = spark.read.parquet(outDir)
+      .groupBy("route", "batch_id").count().collect()
+      .map(r => (r.getString(0), r.getAs[Number](1).longValue) -> r.getLong(2)).toMap
+    val before = counts
+    assert(before === Map(("user_turns", 0L) -> 1L, ("default", 0L) -> 1L,
+      ("user_turns", 1L) -> 1L))
+    // the same batch id again (a replay after a failure) replaces its own
+    // partitions and leaves the other batch's alone
+    StreamingPipeline.writeRoutedBatch(b0, 0L, outDir)
+    assert(counts === before)
+  }
+
+  test("routed streaming sink rejects a stream carrying the reserved batch_id column") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Turn]
+    val routed = graft.route.RouteStage.routed(
+        graft.run.Pipeline.parseEnrich(spark, mem.toDF()), graft.run.Pipeline.routeTable)
+      .withColumn("Batch_Id", org.apache.spark.sql.functions.lit(7L))
+    val e = intercept[IllegalArgumentException] {
+      StreamingPipeline.startRoutedSinks(routed,
+        Files.createTempDirectory("graft_stream_reserved").toString,
+        Files.createTempDirectory("graft_stream_reserved_ck").toString)
+    }
+    assert(e.getMessage.contains("batch_id"))
   }
 
   private def tsm(min: Int): Timestamp = new Timestamp(ts(0).getTime + min * 60000L)
